@@ -9,6 +9,7 @@ import graft.llm.{Bpe, Dedup, ExactSubstr, Mixing, Similarity, TextAnalysis}
 import graft.operators.{Skew, Upsert, WpLoad, WpReaders}
 import graft.sinks.Sinks
 import graft.sources.Sources
+import graft.util.Par.inParallel
 
 /** The registered query inventory — one entry per implemented operator
   * from SURVEY.md §2 (+ the LLM-pipeline extensions), each with a
@@ -41,30 +42,6 @@ object Queries {
   private def tmpDir(dir: String, name: String): String = {
     val sf = dir.replaceAll("[^0-9a-zA-Z.]", "_")
     s"/tmp/graft_q/$sf/$name"
-  }
-
-  /** Run INDEPENDENT side-effect stages concurrently (optimization
-    * guide §2.6 — Spark's scheduler happily runs several jobs at once;
-    * composite store-building queries measured 30-40% inter-job DRIVER
-    * gaps when the builds run strictly sequentially, so overlapping
-    * them lets one stage's planning/commit overlap another's
-    * execution and back-fills the executor pool that each tiny stage
-    * underuses on its own). Only for stages that touch DISJOINT
-    * output directories and share no frame mutation — results are
-    * identical to the sequential composition by construction. The
-    * first failure propagates with its original exception (a failed
-    * build must surface exactly as it would sequentially). */
-  private def inParallel(stages: (() => Unit)*): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(stages.size)
-    try {
-      val futs = stages.map(f => pool.submit(
-        new java.util.concurrent.Callable[Unit] { def call(): Unit = f() }))
-      futs.foreach { fu =>
-        try fu.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
-      }
-    } finally pool.shutdown()
   }
 
   // ---- oracle SQL builders ------------------------------------------------
@@ -7822,12 +7799,8 @@ object Queries {
       val vecRows = s.read.parquet(s"$dir/ann/assignments").count()
       val packsDocs = s.read.parquet(s"$dir/out/data")
         .agg(sum(col("n_docs"))).head().getLong(0)
-      val fs = new org.apache.hadoop.fs.Path(s"$dir/trace")
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      val traceGens = fs
-        .listStatus(new org.apache.hadoop.fs.Path(s"$dir/trace"))
-        .count(st => st.isDirectory && st.getPath.getName.startsWith("gen-"))
-        .toLong
+      val traceGens = graft.store.Generations.RankTrace
+        .list(s, s"$dir/trace").size.toLong
       val sftDocs = s.read.parquet(s"$dir/sft/out/data")
         .agg(sum(col("n_docs"))).head().getLong(0)
       Seq(("lexical_n", lexN), ("packs_docs", packsDocs),

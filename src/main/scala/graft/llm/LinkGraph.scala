@@ -302,70 +302,22 @@ object LinkGraph {
 
   // ---- incremental rank refresh: per-sweep trace + delta frontier ----
 
-  private val TraceCommit = "_graft_trace_committed"
-
-  private def traceFs(spark: org.apache.spark.sql.SparkSession,
-                      dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Latest COMMITTED generation under `dir`, by PARSED generation
-    * number — past the %04d padding `gen-10000` must outrank
-    * `gen-9999` (a lexical sort would silently chain refreshes off a
-    * stale generation); non-numeric names are ignored, matching
-    * [[nextTraceGen]]'s numeric parse. */
-  private def latestTraceGen(spark: org.apache.spark.sql.SparkSession,
-                             dir: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = traceFs(spark, dir)
-    if (!fs.exists(p)) return None
-    val gens = fs.listStatus(p)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-")
-        && st.getPath.getName.stripPrefix("gen-").forall(_.isDigit)
-        && st.getPath.getName.stripPrefix("gen-").nonEmpty
-        && fs.exists(new org.apache.hadoop.fs.Path(st.getPath, TraceCommit)))
-    if (gens.isEmpty) None
-    else Some(gens.maxBy(
-      _.getPath.getName.stripPrefix("gen-").toInt).getPath.toString)
-  }
+  /** Trace generations follow the [[graft.store.Generations]]
+    * protocol: each run or refresh writes a fresh `gen-NNNN` and
+    * commits it marker-last, and refreshes chain from the latest
+    * committed one. */
+  private val Traces = graft.store.Generations.RankTrace
 
   /** Overlapped trace-artifact writes (optimization guide §2.6): a
     * traced run's persisted artifacts (edges/outw/base/meta and each
     * sweep's rank frame) are consumed only by LATER maintenance runs,
-    * never by the in-flight computation — every frame handed here is
-    * already localCheckpoint'd, so writing it on a side thread
-    * overlaps the (driver-gap-dominated) sweep loop instead of
-    * serializing behind it. Crash-safety is preserved: [[await]]
-    * rethrows the first failure and MUST be called before the commit
+    * never by the in-flight computation — every frame handed to the
+    * group is already localCheckpoint'd, so writing it on a side
+    * thread overlaps the (driver-gap-dominated) sweep loop instead of
+    * serializing behind it. The group is awaited before the commit
     * marker, so a failed write leaves an uncommitted (invisible)
     * generation exactly as the sequential form did. */
-  private class AsyncWrites(threads: Int = 2) {
-    private val pool =
-      java.util.concurrent.Executors.newFixedThreadPool(threads)
-    private val futs = collection.mutable.ArrayBuffer
-      .empty[java.util.concurrent.Future[_]]
-    def submit(f: => Unit): Unit =
-      futs += pool.submit(new Runnable { def run(): Unit = f })
-    def await(): Unit =
-      try futs.foreach { fu =>
-        try fu.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
-      } finally pool.shutdown()
-  }
-
-  private def nextTraceGen(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = traceFs(spark, dir)
-    val next = if (!fs.exists(p)) 0
-      else fs.listStatus(p).map(_.getPath.getName)
-        .filter(n => n.startsWith("gen-")
-          && n.stripPrefix("gen-").nonEmpty
-          && n.stripPrefix("gen-").forall(_.isDigit))
-        .map(_.stripPrefix("gen-").toInt).foldLeft(-1)(math.max) + 1
-    f"$dir/gen-$next%04d"
-  }
+  private val TraceWriteThreads = 2
 
   /** Shared trace writer behind [[pageRankTrace]] / [[trustRankTrace]]:
     * both recurrences differ ONLY in the teleport vector (Gyöngyi et
@@ -412,30 +364,29 @@ object LinkGraph {
         nodes.select(col("node"),
           lit((1.0 - damping) / n).as("__base"), lit(1.0 / n).as("rank"))
     }).localCheckpoint()
-    val gen = nextTraceGen(spark, traceDir)
+    val gen = Traces.next(spark, traceDir)
     // every artifact below derives from checkpointed frames and is
     // read only by later maintenance runs — write them on the side
     // pool so the sweep loop never waits on a parquet commit; the
-    // await-before-marker keeps the crash contract (see AsyncWrites)
-    val w = new AsyncWrites()
-    w.submit(e.select(col("src"), col("dst"), col("__w").as("weight"))
-      .write.mode("overwrite").parquet(s"$gen/edges"))
-    w.submit(e.groupBy(col("src")).agg(sum(col("__w")).as("__ow"))
-      .write.mode("overwrite").parquet(s"$gen/outw"))
-    w.submit(withBase.select(col("node"), col("__base"))
-      .write.mode("overwrite").parquet(s"$gen/base"))
-    seedFrame.foreach(sf =>
-      w.submit(sf.write.mode("overwrite").parquet(s"$gen/seeds")))
-    w.submit(spark.range(1).select(lit(iters).as("iters"),
-        lit(damping).as("damping"), lit(n).as("n"),
-        lit(orderedFold).as("ordered_fold"), lit(mode).as("mode"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$gen/meta"))
-    val out = rankSweeps(e, withBase, iters, damping, orderedFold,
-      (t, r) =>
-        w.submit(r.write.mode("overwrite").parquet(f"$gen/sweep-$t%04d")))
-    w.await()
-    val m = new org.apache.hadoop.fs.Path(gen, TraceCommit)
-    traceFs(spark, traceDir).create(m, true).close()
+    // await-before-marker keeps the crash contract (TraceWriteThreads)
+    val out = graft.util.Par.group(TraceWriteThreads) { w =>
+      w.submit(e.select(col("src"), col("dst"), col("__w").as("weight"))
+        .write.mode("overwrite").parquet(s"$gen/edges"))
+      w.submit(e.groupBy(col("src")).agg(sum(col("__w")).as("__ow"))
+        .write.mode("overwrite").parquet(s"$gen/outw"))
+      w.submit(withBase.select(col("node"), col("__base"))
+        .write.mode("overwrite").parquet(s"$gen/base"))
+      seedFrame.foreach(sf =>
+        w.submit(sf.write.mode("overwrite").parquet(s"$gen/seeds")))
+      w.submit(spark.range(1).select(lit(iters).as("iters"),
+          lit(damping).as("damping"), lit(n).as("n"),
+          lit(orderedFold).as("ordered_fold"), lit(mode).as("mode"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$gen/meta"))
+      rankSweeps(e, withBase, iters, damping, orderedFold,
+        (t, r) =>
+          w.submit(r.write.mode("overwrite").parquet(f"$gen/sweep-$t%04d")))
+    }
+    Traces.commit(spark, gen)
     out
   }
 
@@ -505,7 +456,7 @@ object LinkGraph {
     require(deltaBroadcastLimit >= 1,
       s"pageRankRefresh: deltaBroadcastLimit must be >= 1, got " +
         deltaBroadcastLimit)
-    val gen = latestTraceGen(spark, traceDir).getOrElse(
+    val gen = Traces.latest(spark, traceDir).getOrElse(
       throw new IllegalArgumentException(
         s"pageRankRefresh: no committed trace generation under $traceDir" +
           " — run pageRankTrace first"))
@@ -517,7 +468,7 @@ object LinkGraph {
     // pre-mode traces (no `mode` column / base frame) are uniform-base
     val mode = if (meta.schema.fieldNames.contains("mode"))
       meta.getAs[String]("mode") else "pagerank"
-    val fs = traceFs(spark, traceDir)
+    val fs = graft.store.Generations.fs(spark, traceDir)
     def genHas(name: String): Boolean =
       fs.exists(new org.apache.hadoop.fs.Path(s"$gen/$name"))
     def fullTrace(merged: DataFrame): DataFrame = mode match {
@@ -602,91 +553,91 @@ object LinkGraph {
     val sources = deltaAgg.select(col("src").as("node")).distinct()
       .localCheckpoint()
     val base = (1.0 - damping) / n
-    val genNew = nextTraceGen(spark, traceDir)
+    val genNew = Traces.next(spark, traceDir)
     // the generation's carried artifacts and per-sweep frames are read
     // only by LATER refreshes (each sweep below reads the OLD gen's
     // frames and its own checkpointed `patched`) — write them on the
     // side pool so the frontier loop never blocks on a parquet commit;
-    // await-before-marker preserves the crash contract (AsyncWrites)
-    val w = new AsyncWrites()
-    w.submit(merged.write.mode("overwrite").parquet(s"$genNew/edges"))
-    w.submit(outW.write.mode("overwrite").parquet(s"$genNew/outw"))
-    w.submit(spark.read.parquet(s"$gen/meta")
-      .write.mode("overwrite").parquet(s"$genNew/meta"))
-    // the base frame / seed set are properties of the node set, which
-    // this path did not change — carry them so refreshes keep chaining
-    if (genHas("base"))
-      w.submit(spark.read.parquet(s"$gen/base")
-        .write.mode("overwrite").parquet(s"$genNew/base"))
-    if (genHas("seeds"))
-      w.submit(spark.read.parquet(s"$gen/seeds")
-        .write.mode("overwrite").parquet(s"$genNew/seeds"))
-    val baseDf = if (mode == "trustrank")
-      spark.read.parquet(s"$gen/base") else null
-    var patched = spark.read.parquet(f"$gen/sweep-0000").localCheckpoint()
-    // snapshot the var before handing it to the by-name submit — the
-    // loop below reassigns `patched`, and a deferred by-name read
-    // would write whichever frame the var holds at RUN time
-    val sweep0 = patched
-    w.submit(sweep0.write.mode("overwrite").parquet(f"$genNew/sweep-0000"))
-    var frontier = spark.emptyDataFrame
-    for (t <- 1 to iters) {
-      val influencers = (if (t == 1) sources
-        else sources.unionByName(frontier).distinct()).localCheckpoint()
-      val affected = merged
-        .join(broadcast(influencers.withColumnRenamed("node", "src")),
-          Seq("src"))
-        .select(col("dst").as("node")).distinct().localCheckpoint()
-      // frontier-first join order: the filtered in-edge frame is
-      // frontier × in-degree (eagerly checkpointed so AQE sees its
-      // true size and broadcasts it) — the out-weight and rank node
-      // frames are then only SCANNED, never shuffled
-      val filtered = merged
-        .join(broadcast(affected.withColumnRenamed("node", "dst")),
-          Seq("dst"))
-        .localCheckpoint()
-      val contribs = filtered
-        .join(outW, Seq("src"))
-        .join(patched.select(col("node").as("src"), col("rank")), Seq("src"))
-        .select(col("dst"), col("src"),
-          ((col("rank") / col("__ow")) * col("weight").cast("long"))
-            .as("__contrib"))
-      val mass =
-        if (orderedFold)
-          contribs.groupBy(col("dst"))
-            .agg(orderedFoldSum(col("src"), col("__contrib")).as("__mass"))
-        else
-          contribs.groupBy(col("dst"))
-            .agg(sum(col("__contrib")).as("__mass"))
-      val massed = affected
-        .join(mass.withColumnRenamed("dst", "node"), Seq("node"), "left")
-      // uniform base stays a literal (the scalar from meta — the
-      // bit-exact pagerank shape); the seed base joins the persisted
-      // base frame, broadcast-driven by the bounded `affected` side
-      val recomputed =
-        if (mode == "trustrank")
-          massed.join(baseDf, Seq("node"))
-            .select(col("node"),
-              (col("__base") +
-                lit(damping) * coalesce(col("__mass"), lit(0.0)))
+    // await-before-marker preserves the crash contract (TraceWriteThreads)
+    val last = graft.util.Par.group(TraceWriteThreads) { w =>
+      w.submit(merged.write.mode("overwrite").parquet(s"$genNew/edges"))
+      w.submit(outW.write.mode("overwrite").parquet(s"$genNew/outw"))
+      w.submit(spark.read.parquet(s"$gen/meta")
+        .write.mode("overwrite").parquet(s"$genNew/meta"))
+      // the base frame / seed set are properties of the node set, which
+      // this path did not change — carry them so refreshes keep chaining
+      if (genHas("base"))
+        w.submit(spark.read.parquet(s"$gen/base")
+          .write.mode("overwrite").parquet(s"$genNew/base"))
+      if (genHas("seeds"))
+        w.submit(spark.read.parquet(s"$gen/seeds")
+          .write.mode("overwrite").parquet(s"$genNew/seeds"))
+      val baseDf = if (mode == "trustrank")
+        spark.read.parquet(s"$gen/base") else null
+      var patched = spark.read.parquet(f"$gen/sweep-0000").localCheckpoint()
+      // snapshot the var before handing it to the by-name submit — the
+      // loop below reassigns `patched`, and a deferred by-name read
+      // would write whichever frame the var holds at RUN time
+      val sweep0 = patched
+      w.submit(sweep0.write.mode("overwrite").parquet(f"$genNew/sweep-0000"))
+      var frontier = spark.emptyDataFrame
+      for (t <- 1 to iters) {
+        val influencers = (if (t == 1) sources
+          else sources.unionByName(frontier).distinct()).localCheckpoint()
+        val affected = merged
+          .join(broadcast(influencers.withColumnRenamed("node", "src")),
+            Seq("src"))
+          .select(col("dst").as("node")).distinct().localCheckpoint()
+        // frontier-first join order: the filtered in-edge frame is
+        // frontier × in-degree (eagerly checkpointed so AQE sees its
+        // true size and broadcasts it) — the out-weight and rank node
+        // frames are then only SCANNED, never shuffled
+        val filtered = merged
+          .join(broadcast(affected.withColumnRenamed("node", "dst")),
+            Seq("dst"))
+          .localCheckpoint()
+        val contribs = filtered
+          .join(outW, Seq("src"))
+          .join(patched.select(col("node").as("src"), col("rank")), Seq("src"))
+          .select(col("dst"), col("src"),
+            ((col("rank") / col("__ow")) * col("weight").cast("long"))
+              .as("__contrib"))
+        val mass =
+          if (orderedFold)
+            contribs.groupBy(col("dst"))
+              .agg(orderedFoldSum(col("src"), col("__contrib")).as("__mass"))
+          else
+            contribs.groupBy(col("dst"))
+              .agg(sum(col("__contrib")).as("__mass"))
+        val massed = affected
+          .join(mass.withColumnRenamed("dst", "node"), Seq("node"), "left")
+        // uniform base stays a literal (the scalar from meta — the
+        // bit-exact pagerank shape); the seed base joins the persisted
+        // base frame, broadcast-driven by the bounded `affected` side
+        val recomputed =
+          if (mode == "trustrank")
+            massed.join(baseDf, Seq("node"))
+              .select(col("node"),
+                (col("__base") +
+                  lit(damping) * coalesce(col("__mass"), lit(0.0)))
+                  .as("__new"))
+          else
+            massed.select(col("node"),
+              (lit(base) + lit(damping) * coalesce(col("__mass"), lit(0.0)))
                 .as("__new"))
-        else
-          massed.select(col("node"),
-            (lit(base) + lit(damping) * coalesce(col("__mass"), lit(0.0)))
-              .as("__new"))
-      patched = spark.read.parquet(f"$gen/sweep-$t%04d")
-        .join(recomputed, Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("__new"), col("rank")).as("rank"))
-        .localCheckpoint()
-      val done = patched
-      w.submit(done.write.mode("overwrite").parquet(f"$genNew/sweep-$t%04d"))
-      frontier = affected
+        patched = spark.read.parquet(f"$gen/sweep-$t%04d")
+          .join(recomputed, Seq("node"), "left")
+          .select(col("node"),
+            coalesce(col("__new"), col("rank")).as("rank"))
+          .localCheckpoint()
+        val done = patched
+        w.submit(done.write.mode("overwrite").parquet(f"$genNew/sweep-$t%04d"))
+        frontier = affected
+      }
+      patched
     }
-    w.await()
-    val m = new org.apache.hadoop.fs.Path(genNew, TraceCommit)
-    traceFs(spark, traceDir).create(m, true).close()
-    patched
+    Traces.commit(spark, genNew)
+    last
   }
 
   /** Garbage-collect RETIRED trace generations — each one is a full
@@ -697,7 +648,8 @@ object LinkGraph {
     * every RETIRED generation: committed ones older than the serving
     * generation unconditionally, and UNCOMMITTED stragglers only once
     * they are older than `uncommittedGraceMs` (by the newest
-    * modification time among the directory and its direct children) —
+    * modification time among the directory and its direct children;
+    * `uncommittedGraceMs = 0` reclaims them at once) —
     * an uncommitted generation younger than the grace window may be a
     * refresh/trace currently writing, and a concurrent vacuum must
     * not destroy it mid-run; a genuinely crashed straggler ages past
@@ -711,27 +663,7 @@ object LinkGraph {
     require(uncommittedGraceMs >= 0,
       s"vacuumRankTrace: uncommittedGraceMs must be >= 0, got " +
         uncommittedGraceMs)
-    val serving = latestTraceGen(spark, dir).getOrElse(return Nil)
-    val servingName = new org.apache.hadoop.fs.Path(serving).getName
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = traceFs(spark, dir)
-    val now = System.currentTimeMillis()
-    def newestMtime(st: org.apache.hadoop.fs.FileStatus): Long =
-      (st.getModificationTime +:
-        fs.listStatus(st.getPath).map(_.getModificationTime).toSeq).max
-    val deleted = collection.mutable.ArrayBuffer.empty[String]
-    fs.listStatus(p)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-")
-        && st.getPath.getName != servingName)
-      .foreach { st =>
-        val committed = fs.exists(
-          new org.apache.hadoop.fs.Path(st.getPath, TraceCommit))
-        if (committed || now - newestMtime(st) > uncommittedGraceMs) {
-          fs.delete(st.getPath, true)
-          deleted += st.getPath.toString
-        }
-      }
-    deleted.toSeq
+    Traces.vacuum(spark, dir, uncommittedGraceMs, retiredAtOnce = true)
   }
 
   /** Gate a document frame on its host's prior: keep rows whose host

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.util.Par
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -600,7 +601,7 @@ object Packing {
     // FIFO keeps the critical path prioritized
     var written: Set[Long] = Set.empty
     var oldManifest: DataFrame = null
-    inParallel(
+    Par.inParallel(
       () => sharded.repartition(col("shard"))
         .sortWithinPartitions(col("shard"), col("rank"))
         .write.partitionBy("shard")
@@ -944,27 +945,6 @@ object Packing {
     * joined with a re-aggregation of the written pack data —
     * the same audit frame the single-phase product returns, with the
     * phase dimension in front. */
-  /** Run INDEPENDENT side-effect stages concurrently (optimization
-    * guide §2.6): stages must touch disjoint outputs and read only
-    * materialized inputs; results equal the sequential composition by
-    * construction, and the first failure propagates with its original
-    * exception. Stages submit in order — FIFO scheduling prioritizes
-    * the first (put the critical path first). */
-  private def inParallel(stages: (() => Unit)*): Unit = {
-    if (stages.isEmpty) return
-    if (stages.size == 1) { stages.head.apply(); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(stages.size)
-    try {
-      val futs = stages.map(f => pool.submit(
-        new java.util.concurrent.Callable[Unit] { def call(): Unit = f() }))
-      futs.foreach { fu =>
-        try fu.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
-      }
-    } finally pool.shutdown()
-  }
-
   def phasedShards(docs: DataFrame, idCol: String, textCol: String,
                    domainCol: String, phases: Seq[Mixing.MixPhase],
                    packBudget: Long, dir: String, nShards: Int,
@@ -989,38 +969,29 @@ object Packing {
     // ~40% inter-job driver gaps) and union in phase order, so the
     // result is identical to the sequential composition
     val frames = new Array[DataFrame](phases.size)
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(math.min(phases.size, 4))
-    try {
-      val futs = phases.zipWithIndex.map { case (p, i) =>
-        pool.submit(new Runnable {
-          def run(): Unit = {
-            val gen = f"$dir/phase-$i%04d"
-            val member = sched.where(col("phase_idx") === i)
-              .select(col("doc_id").as("__pm"))
-            val phaseDocs = docs.join(member, docs(idCol) === col("__pm"))
-              .drop("__pm").localCheckpoint()
-            packSequences(phaseDocs, idCol, tokCount, packBudget)
-              .write.mode("overwrite").parquet(s"$gen/assignment")
-            materializeShardsFromAssignment(spark, s"$gen/assignment",
-              phaseDocs, idCol, tokArr, s"$gen/shards", nShards)
-            val manifest = spark.read.parquet(s"$gen/shards/manifest")
-            val data = spark.read.parquet(s"$gen/shards/data")
-              .groupBy(col("shard").cast("long").as("shard"))
-              .agg(sum(col("n_tokens")).as("sum_tokens"),
-                sum(col("n_docs")).as("sum_docs"))
-            frames(i) = manifest.join(data, Seq("shard"))
-              .select(lit(i.toLong).as("phase_idx"), lit(p.name).as("phase"),
-                col("*"))
-          }
-        })
+    Par.group(math.min(phases.size, 4)) { g =>
+      phases.zipWithIndex.foreach { case (p, i) =>
+        g.submit {
+          val gen = f"$dir/phase-$i%04d"
+          val member = sched.where(col("phase_idx") === i)
+            .select(col("doc_id").as("__pm"))
+          val phaseDocs = docs.join(member, docs(idCol) === col("__pm"))
+            .drop("__pm").localCheckpoint()
+          packSequences(phaseDocs, idCol, tokCount, packBudget)
+            .write.mode("overwrite").parquet(s"$gen/assignment")
+          materializeShardsFromAssignment(spark, s"$gen/assignment",
+            phaseDocs, idCol, tokArr, s"$gen/shards", nShards)
+          val manifest = spark.read.parquet(s"$gen/shards/manifest")
+          val data = spark.read.parquet(s"$gen/shards/data")
+            .groupBy(col("shard").cast("long").as("shard"))
+            .agg(sum(col("n_tokens")).as("sum_tokens"),
+              sum(col("n_docs")).as("sum_docs"))
+          frames(i) = manifest.join(data, Seq("shard"))
+            .select(lit(i.toLong).as("phase_idx"), lit(p.name).as("phase"),
+              col("*"))
+        }
       }
-      futs.foreach { fu =>
-        try fu.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
-      }
-    } finally pool.shutdown()
+    }
     frames.reduce(_ unionByName _)
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.llm.Similarity
+import graft.util.Par.inParallel
 
 /** Continuous ANN-index ingestion — the streaming twins of
   * [[graft.llm.Similarity.appendPqIndex]] /
@@ -58,29 +59,6 @@ object IndexIngest {
       else spark.read).parquet(path)
     if (cached == null) memo.set(df.schema)
     df
-  }
-
-  /** Run INDEPENDENT side-effect stages concurrently (optimization
-    * guide §2.6): ledger writes that touch DISJOINT directories and
-    * share no frame mutation overlap one stage's planning/commit with
-    * another's execution — at any cluster size the concurrent jobs
-    * back-fill the executor pool each small write underuses alone.
-    * Results are identical to the sequential composition by
-    * construction; the first failure propagates with its original
-    * exception. */
-  private def inParallel(stages: (() => Unit)*): Unit = {
-    if (stages.isEmpty) return
-    if (stages.size == 1) { stages.head.apply(); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(stages.size)
-    try {
-      val futs = stages.map(f => pool.submit(
-        new java.util.concurrent.Callable[Unit] { def call(): Unit = f() }))
-      futs.foreach { fu =>
-        try fu.get()
-        catch { case e: java.util.concurrent.ExecutionException =>
-          throw e.getCause }
-      }
-    } finally pool.shutdown()
   }
 
   /** The two driver scalars every pack append needs from the existing
@@ -1272,13 +1250,8 @@ object IndexIngest {
       scrub(root, prefix, "codes", "vec_id", Nil)
     }
     scrubRoot(dir, "")
-    val dp = new org.apache.hadoop.fs.Path(dir)
-    val fs = dp.getFileSystem(hconf)
-    if (fs.exists(dp))
-      fs.listStatus(dp)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-"))
-        .map(_.getPath).sortBy(_.getName)
-        .foreach(g => scrubRoot(g.toString, s"${g.getName}/"))
+    graft.store.Generations.VectorIndex.list(spark, dir)
+      .foreach(g => scrubRoot(g.toString, s"${g.getName}/"))
     require(report.nonEmpty,
       s"retractFromVectorIndex: $dir has neither assignments nor codes — " +
         "not a persisted vector index")

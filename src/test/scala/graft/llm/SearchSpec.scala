@@ -256,7 +256,7 @@ class SearchSpec extends SparkSpec {
     assert(e.getMessage.contains("empty corpus"))
   }
 
-  test("appendPostings: an uncommitted delta (crashed append) is invisible and the retry reclaims it") {
+  test("appendPostings: an uncommitted delta (crashed append) is invisible and the retry skips past it") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_bm25_crash").toString
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").limit(300)
@@ -277,17 +277,26 @@ class SearchSpec extends SparkSpec {
     // serving ignores the uncommitted event entirely
     assert(Search.bm25ServeJoinTopK(spark, dir, bench, k = 5)
       .collect().map(_.toString).toSeq === before)
-    // the retry reclaims the crashed directory and commits atomically
+    // the retry commits the NEXT number and leaves the straggler alone
+    // (it could be a writer mid-append): still uncommitted, unserved
     Search.appendPostings(spark, dir, docs.where(col("doc_id") % 7 === 0),
       shards = 2)
-    assert(new java.io.File(s"$crashed/_graft_delta_committed").exists())
+    assert(new java.io.File(s"$root/delta-0001/_graft_delta_committed")
+      .exists())
+    assert(new java.io.File(crashed).exists() &&
+      !new java.io.File(s"$crashed/_graft_delta_committed").exists())
     val fresh = java.nio.file.Files
       .createTempDirectory("graft_bm25_crash_fresh").toString
     Search.buildPostings(docs, fresh, shards = 4)
-    assert(Search.bm25ServeJoinTopK(spark, dir, bench, k = 5)
-        .orderBy("rank").collect().map(_.toString).toSeq ===
-      Search.bm25ServeJoinTopK(spark, fresh, bench, k = 5)
-        .orderBy("rank").collect().map(_.toString).toSeq)
+    def served(d: String) = Search.bm25ServeJoinTopK(spark, d, bench, k = 5)
+      .orderBy("rank").collect().map(_.toString).toSeq
+    assert(served(dir) === served(fresh))
+    // a compaction retires the generation holding the straggler, and
+    // the vacuum then reclaims it with the rest of the retired surface
+    Search.compactPostings(spark, dir, shards = 2)
+    Search.vacuumPostings(spark, dir, graceMs = 0L)
+    assert(!new java.io.File(root).exists())
+    assert(served(dir) === served(fresh))
   }
 
   test("retractPostings: serving after a takedown is bit-equal to a rebuild over the survivors") {
@@ -605,9 +614,9 @@ class SearchSpec extends SparkSpec {
       .limit(3).write.parquet(s"$dir/gen-0001/postings")
     assert(Search.bm25ServeJoinTopK(spark, dir, bench, k = 5)
       .orderBy("rank").collect().map(_.toString).toSeq === before)
-    // the retried rebuild reclaims the straggler and swaps atomically
+    // the retried rebuild skips past the straggler and swaps atomically
     Search.buildPostings(docs, dir, shards = 2)
-    assert(Search.servingRoot(spark, dir).endsWith("gen-0001"))
+    assert(Search.servingRoot(spark, dir).endsWith("gen-0002"))
     val fresh = java.nio.file.Files
       .createTempDirectory("graft_bm25_bcrash_f").toString
     Search.buildPostings(docs, fresh, shards = 2)
